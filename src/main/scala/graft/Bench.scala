@@ -232,18 +232,28 @@ object Bench {
     val nRetries = all.map(_._2.retried).sum
     val total = all.collect { case (_, c) if c.runs.nonEmpty => c.min }.sum
     val loadEnd = loadAvg()
+    // nproc is the HOST's core count; master and shuffle_partitions are
+    // what the session actually ran with (SPARK_GRAFT_CPUS and any
+    // SPARK_GRAFT_CONF override), git_sha the code that ran
     val nproc = Runtime.getRuntime.availableProcessors
+    val master = graft.model.Cursor.jsonStr(spark.sparkContext.master)
+    val shufflePartitions = graft.model.Cursor.jsonStr(spark.conf.get("spark.sql.shuffle.partitions"))
+    val gitSha = graft.model.Cursor.jsonStr(
+      scala.util.Try(scala.sys.process.Process(Seq("git", "rev-parse", "HEAD")).!!.trim).getOrElse("unknown"))
     // self-certifying record: the resolved SPARK_GRAFT_CONF override
     // map (normally {}) rides in the JSON, so a record produced under
     // a stale exported override is distinguishable after the fact
-    val confStamp = BenchSession.confOverrides
-      .map { case (k, v) => "\"" + k + "\":\"" + v.replace("\"", "\\\"") + "\"" }
-      .mkString("{", ",", "}")
-    val json = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"spread":$spread,"load":$loads,"foreign":$foreigns,"contaminated":$contaminated,"n_retries":$nRetries,"loadavg_start":$loadStart%.2f,"loadavg_end":$loadEnd%.2f,"nproc":$nproc,"n_entries":${all.size},"conf_overrides":$confStamp,"sf":"$sfDir"}"""
+    val json = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"spread":$spread,"load":$loads,"foreign":$foreigns,"contaminated":$contaminated,"n_retries":$nRetries,"loadavg_start":$loadStart%.2f,"loadavg_end":$loadEnd%.2f,"nproc":$nproc,"master":$master,"shuffle_partitions":$shufflePartitions,"git_sha":$gitSha,"n_entries":${all.size},"conf_overrides":${confStamp(BenchSession.confOverrides)},"sf":"$sfDir"}"""
     println(json)
     writeRecord(json)
     spark.stop()
   }
+
+  /** The override map as a JSON object; keys and values are escaped
+    * alike (backslash, quote, control characters). */
+  def confStamp(overrides: Seq[(String, String)]): String =
+    overrides.map { case (k, v) => graft.model.Cursor.jsonStr(k) + ":" + graft.model.Cursor.jsonStr(v) }
+      .mkString("{", ",", "}")
 
   /** Persist the record the stdout line carries: two driver rounds in a
     * row captured only an unparseable tail fragment of the println, so
@@ -268,8 +278,8 @@ object Bench {
     }
 
   /** End-to-end messaging throughput: publish 100k messages through the
-    * distributed producer (4-shard topic, key routing), then stream
-    * them all through the DSv2 source into a count. The reference's
+    * DSv2 sink (4-shard topic, key routing), then stream them all
+    * through the DSv2 source into a count. The reference's
     * ceiling for the same work is the Kinesis service limit
     * (1k rec/s/shard write -> 25 s for 4 shards); this path measures
     * the engine's own overhead instead.
@@ -294,10 +304,7 @@ object Bench {
         "cast(null as struct<clientSourceId: string>) as source")
         .as[Message](Message.encoder)
       Topics.create(name, 4)
-      Producer.publishDataset(name + "#0", msgs.filter("ulid.msb % 4 = 0"))
-      Producer.publishDataset(name + "#1", msgs.filter("ulid.msb % 4 = 1"))
-      Producer.publishDataset(name + "#2", msgs.filter("ulid.msb % 4 = 2"))
-      Producer.publishDataset(name + "#3", msgs.filter("ulid.msb % 4 = 3"))
+      msgs.write.format("graft-messages").option("topic", name).mode("append").save()
       val q = spark.readStream.format("graft-messages").option("topic", name)
         .option("maxRecordsPerBatch", "25000").load()
         .writeStream.format("noop")

@@ -45,17 +45,19 @@ object ProfileOne {
     }
     spark.sparkContext.addSparkListener(listener)
 
-    // poll until the recorded stage set is stable across two samples —
-    // a fixed sleep can drop late completion events on a loaded host
-    // (and lets run N-1 stragglers land after the clear)
+    // poll until two consecutive 250 ms samples leave the recorded
+    // stage set unchanged — a fixed sleep, or a single equal pair, can
+    // drop late completion events when the listener bus stalls on a
+    // loaded host (and lets run N-1 stragglers land after the clear)
     def drainListenerBus(): Unit = {
-      var prev = -1
       var cur = stages.synchronized(stages.size)
+      var unchanged = 0
       var tries = 0
-      while (prev != cur && tries < 20) {
+      while (unchanged < 2 && tries < 20) {
         Thread.sleep(250)
-        prev = cur
-        cur = stages.synchronized(stages.size)
+        val next = stages.synchronized(stages.size)
+        unchanged = if (next == cur) unchanged + 1 else 0
+        cur = next
         tries += 1
       }
     }

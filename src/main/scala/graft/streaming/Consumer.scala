@@ -42,11 +42,11 @@ final class ShardConsumer(log: ShardLog, initial: Cursor, pollIntervalMs: Long =
     while (!done) {
       if (nextIdx < 0) resolve()
       if (nextIdx >= 0) {
-        val got = log.read(Some(ShardLog.formatSeq(nextIdx)), inclusive = true, limit = 1)
+        val got = ReadRetry.readWithRetry(log, nextIdx, 1, pollIntervalMs)
         if (got.nonEmpty) {
           nextIdx += 1
-          lastDelivered = Some(got.head._2)
-          out = Some(got.head._2)
+          lastDelivered = got.headOption
+          out = got.headOption
           done = true
         }
       }
@@ -75,12 +75,9 @@ final class ShardConsumer(log: ShardLog, initial: Cursor, pollIntervalMs: Long =
 
   private def resolve(): Unit = cursor.start match {
     case StartingPoint.OldestRetained => nextIdx = 0L
-    case StartingPoint.Now => nextIdx = ShardLog.parseSeq(log.endSequence)
-    case StartingPoint.AtProviderSequence(seq, inc) =>
-      nextIdx = ShardLog.parseSeq(seq) + (if (inc) 0 else 1)
-    case StartingPoint.AtProviderTime(ts) =>
-      nextIdx = log.sequenceAtTimestamp(ts).map(ShardLog.parseSeq)
-        .getOrElse(ShardLog.parseSeq(log.endSequence))
+    case StartingPoint.Now => nextIdx = log.end
+    case StartingPoint.AtProviderSequence(seq, inc) => nextIdx = ShardOffset.nextIndex(seq, inc)
+    case StartingPoint.AtProviderTime(ts) => nextIdx = log.indexAtTimestamp(ts)
     case StartingPoint.AtUlid(u, inc, tol) =>
       scanToMatch(u.timestampMillis - tol, u.timestampMillis + tol,
         m => m.ulid.contains(u), inc)
@@ -90,26 +87,20 @@ final class ShardConsumer(log: ShardLog, initial: Cursor, pollIntervalMs: Long =
 
   private def scanToMatch(lower: Long, upper: Long,
                           matches: Message => Boolean, inclusive: Boolean): Unit = {
-    val startIdx = log.sequenceAtTimestamp(lower).map(ShardLog.parseSeq)
-    startIdx match {
-      case None =>
-        nextIdx = ShardLog.parseSeq(log.endSequence) // nothing at/after lower bound yet
-      case Some(s0) =>
-        var i = s0
-        val end = ShardLog.parseSeq(log.endSequence)
-        var found = -1L
-        while (found < 0 && i < end) {
-          val rec = log.read(Some(ShardLog.formatSeq(i)), inclusive = true, limit = 1)
-          rec.headOption match {
-            case Some((_, m)) if matches(m) => found = i
-            case Some((_, m)) if m.provider.exists(_.publishedTimestamp > upper) =>
-              i = end // out of the tolerance window: stop scanning
-            case _ => i += 1
-          }
-        }
-        // exact match → position there; no match → lookahead replay
-        // from the first message >= lower bound
-        nextIdx = if (found >= 0) found + (if (inclusive) 0 else 1) else s0
+    val s0 = log.indexAtTimestamp(lower) // the end when nothing is at/after lower yet
+    val end = log.end
+    var i = s0
+    var found = -1L
+    while (found < 0 && i < end) {
+      ReadRetry.readWithRetry(log, i, 1, pollIntervalMs).headOption match {
+        case Some(m) if matches(m) => found = i
+        case Some(m) if m.provider.exists(_.publishedTimestamp > upper) =>
+          i = end // out of the tolerance window: stop scanning
+        case _ => i += 1
+      }
     }
+    // exact match → position there; no match → lookahead replay
+    // from the first message >= lower bound
+    nextIdx = if (found >= 0) found + (if (inclusive) 0 else 1) else s0
   }
 }

@@ -20,10 +20,18 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
   * second hop over the message bus, or a batch rollup over the sink
   * (IngestDedupSpec drives both the stream and the rollup).
   *
-  * Determinism: keep-first is by doc_id, not arrival order — a batch's
-  * verdicts depend only on min(doc_id) across state ∪ batch, so two
-  * docs of one micro-batch race deterministically (smaller id owns the
-  * bucket) and replays reproduce identical verdicts.
+  * Determinism: keep-first is by doc_id within a micro-batch — a
+  * batch's verdicts depend only on min(doc_id) across state ∪ batch,
+  * so two docs of one micro-batch race deterministically (smaller id
+  * owns the bucket) and a replay of the same checkpointed batches
+  * reproduces identical verdicts. Across micro-batches an emitted
+  * verdict is never revised, so a verdict matches the batch reference
+  * (min(doc_id) per bucket over the whole stream) only if no smaller
+  * doc_id of that bucket arrives in a later micro-batch. The source
+  * can break that under backlog: its per-shard admission cap may
+  * deliver a larger doc_id from one shard a micro-batch before a
+  * smaller one from another, and then both stay first-seen
+  * (IngestDedupSpec pins this).
   *
   * State size: one long per live band bucket. At scale the state store
   * is RocksDB-backed and the bucket space is bounded by distinct band

@@ -5,16 +5,16 @@ import org.apache.spark.sql.catalyst.encoders.{AgnosticEncoder, ExpressionEncode
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 
-import graft.model.{Message, UlidGenerator}
+import graft.model.Message
 
 /** DSv2 write path for `format("graft-messages")` — the publish
   * pipeline of SURVEY.md §3.1 mapped onto Spark's write protocol:
   * `Dataset[Message] -> WriteToDataSourceV2Exec -> DataWriter per
-  * partition on executors`. Each writer validates partitionKey,
-  * assigns per-writer monotonic ULIDs (the reference's per-producer
-  * guarantee), routes each message to its key's shard, and flushes in
-  * batches with the retry-only-failures loop (throttle -> backoff,
-  * like `KinesisMessiProducer.java:103-160`).
+  * partition on executors`. Each writer resolves its topic (or log)
+  * once and publishes 500-message batches through one [[Producer]]:
+  * partitionKey validation, partition-seeded monotonic ULIDs (the
+  * reference's per-producer guarantee), key routing and the per-shard
+  * throttle retry all live there.
   *
   * Used for both batch `df.write` and `df.writeStream` (streaming
   * epochs map to commit calls; the shard log is append-only so
@@ -56,33 +56,24 @@ final class MessageDataWriter(topicName: Option[String], logName: Option[String]
 
   private val deserialize = ExpressionEncoder(
     Message.encoder.asInstanceOf[AgnosticEncoder[Message]]).resolveAndBind().createDeserializer()
-  private val ulids = new UlidGenerator(seed = 42L ^ (partitionId.toLong * 0x9e3779b97f4a7c15L))
+  // partition-seeded ULIDs: a re-run of this partition assigns the same ones
+  private val seed = 42L ^ (partitionId.toLong * 0x9e3779b97f4a7c15L)
+  private val producer = topicName match {
+    case Some(t) => Topics.get(t)
+      .getOrElse(throw new IllegalArgumentException(s"unknown topic '$t' — create it with Topics.create"))
+      .producer(seed)
+    case None => new Producer(ShardLog.getOrCreate(logName.get), seed = seed)
+  }
   private val buffer = new scala.collection.mutable.ArrayBuffer[Message]()
   private var written = 0L
 
-  private def shardFor(m: Message): ShardLog = topicName match {
-    case Some(t) => Topics.get(t)
-      .getOrElse(throw new IllegalArgumentException(s"unknown topic '$t' — create it with Topics.create"))
-      .shardFor(m.partitionKey)
-    case None => ShardLog.getOrCreate(logName.get)
-  }
-
   override def write(row: InternalRow): Unit = {
-    val m0 = deserialize(row)
-    require(m0.partitionKey != null && m0.partitionKey.nonEmpty,
-      "partitionKey is required to publish")
-    buffer += (if (m0.ulid.isDefined) m0 else m0.copy(ulid = Some(ulids.next())))
+    buffer += deserialize(row)
     if (buffer.size >= 500) flush()
   }
 
   private def flush(): Unit = {
-    buffer.groupBy(shardFor).foreach { case (shard, batch) =>
-      var pending: Seq[Message] = batch.toSeq
-      while (pending.nonEmpty) {
-        try { shard.putRecords(pending); pending = Nil }
-        catch { case _: ThrottledException => Thread.sleep(5) }
-      }
-    }
+    producer.publish(buffer.toSeq: _*)
     written += buffer.size
     buffer.clear()
   }

@@ -62,10 +62,8 @@ final class MessageTable(topicOpt: Option[String], logOpt: Option[String],
 
   /** Shard-log registry names backing this subscription. */
   private def logNames: Seq[String] = topicOpt match {
-    case Some(topic) =>
-      val t = Topics.get(topic).getOrElse(
-        throw new IllegalArgumentException(s"unknown topic '$topic' — create it with Topics.create"))
-      (0 until t.numShards).map(i => s"$topic#$i")
+    case Some(topic) => Topics.get(topic).map(_.logNames).getOrElse(
+      throw new IllegalArgumentException(s"unknown topic '$topic' — create it with Topics.create"))
     case None => Seq(logOpt.get)
   }
 
@@ -140,31 +138,31 @@ final class MessageScan(logNames: Seq[String], startingPosition: Option[String],
     override def planInputPartitions(): Array[InputPartition] =
       logNames.map { n =>
         val log = ShardLog.getOrCreate(n)
-        val start = minArrival match {
-          case Some(ts) => log.sequenceAtTimestamp(ts).map(ShardLog.parseSeq)
-            .getOrElse(ShardLog.parseSeq(log.endSequence))
-          case None => 0L
-        }
-        MessagePartition(n, start, ShardLog.parseSeq(log.endSequence)): InputPartition
+        val end = log.end
+        MessagePartition(n, minArrival.fold(0L)(log.indexAtTimestamp).min(end), end): InputPartition
       }.toArray
     override def createReaderFactory(): PartitionReaderFactory =
       new MessageReaderFactory(pollIntervalMs)
   }
 }
 
-/** Per-shard offset = the reference's cursor checkpoint (canonical
-  * form: next-index, inclusive=true). */
-final case class ShardOffset(shardId: String, sequenceNumber: String, inclusive: Boolean) {
-  def nextIndex: Long = ShardLog.parseSeq(sequenceNumber) + (if (inclusive) 0 else 1)
+/** Per-shard offset: the index of the next record to read. On the
+  * wire it is the reference's cursor checkpoint in canonical form
+  * (sequence of that next record, inclusive=true). */
+final case class ShardOffset(shardId: String, nextIndex: Long) {
   def json: String =
-    s"""{"shardId": ${Cursor.jsonStr(shardId)}, "sequenceNumber": ${Cursor.jsonStr(sequenceNumber)}, "inclusive": $inclusive}"""
+    Cursor.atSequence(shardId, ShardLog.formatSeq(nextIndex), inclusive = true).checkpoint
 }
 
 object ShardOffset {
+  /** Index of the first record at/after an AT_PROVIDER_SEQUENCE position. */
+  def nextIndex(sequenceNumber: String, inclusive: Boolean): Long =
+    ShardLog.parseSeq(sequenceNumber) + (if (inclusive) 0 else 1)
+
   def fromJson(s: String): ShardOffset = {
     val c = Cursor.fromCheckpoint(s)
     val sp = c.start.asInstanceOf[StartingPoint.AtProviderSequence]
-    ShardOffset(c.shardId, sp.sequenceNumber, sp.inclusive)
+    ShardOffset(c.shardId, nextIndex(sp.sequenceNumber, sp.inclusive))
   }
 }
 
@@ -199,7 +197,7 @@ final class MessageMicroBatchStream(logNames: Seq[String], startingPosition: Opt
   @volatile private var frozenEnd: Option[Map[String, Long]] = None
 
   override def prepareForTriggerAvailableNow(): Unit =
-    frozenEnd = Some(logs.map(l => l.shardId -> ShardLog.parseSeq(l.endSequence)).toMap)
+    frozenEnd = Some(logs.map(l => l.shardId -> l.end).toMap)
 
   // Admission control: each micro-batch admits at most maxPerBatch
   // records PER SHARD; the engine loops batches until caught up.
@@ -230,16 +228,15 @@ final class MessageMicroBatchStream(logNames: Seq[String], startingPosition: Opt
     val cap = rowCap(limit)
     TopicOffset(logs.map { log =>
       val s = starts.getOrElse(log.shardId, 0L)
-      val live = ShardLog.parseSeq(log.endSequence)
+      val live = log.end
       val end = frozenEnd.flatMap(_.get(log.shardId)).map(math.min(_, live)).getOrElse(live)
       val capped = if (cap == Long.MaxValue) end else math.min(end, s + cap)
-      ShardOffset(log.shardId, ShardLog.formatSeq(capped), inclusive = true)
+      ShardOffset(log.shardId, capped)
     })
   }
 
   override def latestOffset(): Offset =
-    TopicOffset(logs.map(log =>
-      ShardOffset(log.shardId, log.endSequence, inclusive = true)))
+    TopicOffset(logs.map(log => ShardOffset(log.shardId, log.end)))
 
   override def reportLatestOffset(): Offset = latestOffset()
 
@@ -290,14 +287,12 @@ object ReadRetry {
     * before a human notices a wedged stream. */
   private val MaxConsecutiveExpiries = 100
 
-  def readWithRetry(log: ShardLog, fromSeq: Option[String], inclusive: Boolean,
-                    limit: Int, pollIntervalMs: Long,
-                    reacquire: () => Unit = () => ()): Seq[(String, Message)] = {
+  def readWithRetry(log: ShardLog, from: Long, limit: Int, pollIntervalMs: Long): Seq[Message] = {
     var genericFailures = 0
     var throttles = 0
     var consecutiveExpiries = 0
     while (true) {
-      try return log.read(fromSeq, inclusive, limit)
+      try return log.read(from, limit)
       catch {
         case e: IteratorExpiredException =>
           // distinct recovery class (KinesisStreamingBuffer.java:121-127):
@@ -311,7 +306,7 @@ object ReadRetry {
               s"iterator on ${log.shardId} expired $consecutiveExpiries times in a row; " +
               "reacquire() is not refreshing the handle (shard closed?)", e)
           System.err.println(s"[graft-source] iterator expired on ${log.shardId} (${e.getMessage}); re-acquiring")
-          reacquire()
+          log.reacquireIterator()
           Thread.sleep(pollIntervalMs)
         case _: ThrottledException =>
           consecutiveExpiries = 0 // a different signal: the handle reached the service
@@ -348,11 +343,9 @@ final class MessageReaderFactory(pollIntervalMs: Long = 1000L) extends Partition
       override def next(): Boolean = {
         if (!buf.hasNext && idx < p.endIdx) {
           val want = math.min(MessageReaderFactory.ReadChunk.toLong, p.endIdx - idx).toInt
-          val recs = ReadRetry.readWithRetry(
-            log, Some(ShardLog.formatSeq(idx)), inclusive = true, limit = want, pollIntervalMs,
-            reacquire = () => log.reacquireIterator())
+          val recs = ReadRetry.readWithRetry(log, idx, want, pollIntervalMs)
           idx += recs.size
-          buf = recs.iterator.map(_._2)
+          buf = recs.iterator
         }
         if (buf.hasNext) { current = buf.next(); true } else false
       }
@@ -376,16 +369,14 @@ object MessageStartingPosition {
     TopicOffset(logs.map { log =>
       val idx: Long = startingPosition.map(_.trim) match {
         case None | Some("earliest") => 0L
-        case Some("latest") => ShardLog.parseSeq(log.endSequence)
+        case Some("latest") => log.end
         case Some(sp) if sp.startsWith("at_timestamp:") =>
-          val ts = sp.stripPrefix("at_timestamp:").toLong
-          log.sequenceAtTimestamp(ts).map(ShardLog.parseSeq)
-            .getOrElse(ShardLog.parseSeq(log.endSequence))
+          log.indexAtTimestamp(sp.stripPrefix("at_timestamp:").toLong)
         case Some(json) =>
           TopicOffset.fromJson(json).offsets.find(_.shardId == log.shardId)
             .map(_.nextIndex).getOrElse(0L)
       }
-      ShardOffset(log.shardId, ShardLog.formatSeq(idx), inclusive = true)
+      ShardOffset(log.shardId, idx)
     })
 }
 
@@ -430,9 +421,7 @@ final class MessageContinuousStream(logNames: Seq[String], startingPosition: Opt
     new MessageContinuousReaderFactory(pollIntervalMs)
 
   override def mergeOffsets(offsets: Array[PartitionOffset]): Offset =
-    TopicOffset(offsets.toSeq.map { case ShardPartitionOffset(sid, next) =>
-      ShardOffset(sid, ShardLog.formatSeq(next), inclusive = true)
-    })
+    TopicOffset(offsets.toSeq.map { case ShardPartitionOffset(sid, next) => ShardOffset(sid, next) })
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
@@ -463,11 +452,8 @@ final class MessageContinuousReaderFactory(pollIntervalMs: Long)
         while (!Thread.currentThread().isInterrupted) {
           if (buf.hasNext) { current = buf.next(); idx += 1; return true }
           try {
-            val recs = ReadRetry.readWithRetry(
-              log, Some(ShardLog.formatSeq(idx)), inclusive = true,
-              limit = MessageReaderFactory.ReadChunk, pollIntervalMs,
-              reacquire = () => log.reacquireIterator())
-            if (recs.nonEmpty) buf = recs.iterator.map(_._2)
+            val recs = ReadRetry.readWithRetry(log, idx, MessageReaderFactory.ReadChunk, pollIntervalMs)
+            if (recs.nonEmpty) buf = recs.iterator
             else Thread.sleep(pollIntervalMs)
           } catch {
             // engine stop interrupts the data-reader thread — also mid

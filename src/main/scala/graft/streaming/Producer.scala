@@ -2,26 +2,26 @@ package graft.streaming
 
 import scala.concurrent.{ExecutionContext, Future}
 
-import org.apache.spark.sql.Dataset
+import graft.model.{Message, UlidGenerator}
 
-import graft.model.{Message, Ulid, UlidGenerator}
-
-/** Publish facade — the reference's producer semantics
-  * (`KinesisMessiProducer.java:47-173`):
+/** The one publish routine — the reference's producer semantics
+  * (`KinesisMessiProducer.java:47-173`) over a route from message to
+  * shard. A bare log is a constant route; a topic routes by partition
+  * key ([[Topic.shardFor]]). [[Topic.producer]] and the DSv2 sink's
+  * per-partition writer both publish through it.
   *  - `partitionKey` REQUIRED on every message (`:64-66`);
   *  - messages without a ULID get a per-producer strictly-monotonic one
   *    (`:68-80`);
-  *  - the batch goes out as one put; on partial failure ONLY the failed
-  *    entries are re-sent, looping until all land (`:103-160`) — which,
-  *    as the reference itself warns (`:112`), can reorder within the
-  *    batch;
-  *  - throttling backs off `backoffMultiplier x pollIntervalMs`
-  *    (`KinesisStreamingBuffer.java:128-135`).
+  *  - messages are grouped by shard (order kept within a shard) and
+  *    each shard batch goes out as one put; a throttled put backs off
+  *    3 x `pollIntervalMs` (`KinesisStreamingBuffer.java:128-135`) and
+  *    re-sends ONLY that shard's batch (`:103-160`), so a retry never
+  *    duplicates a shard batch that already landed.
   */
-final class Producer(log: ShardLog,
-                     pollIntervalMs: Long = 10,
-                     backoffMultiplier: Int = 3,
-                     seed: Long = System.nanoTime()) {
+final class Producer(route: Message => ShardLog, pollIntervalMs: Long, seed: Long) {
+
+  def this(log: ShardLog, pollIntervalMs: Long = 10, seed: Long = System.nanoTime()) =
+    this((_: Message) => log, pollIntervalMs, seed)
 
   private val ulids = new UlidGenerator(seed)
   @volatile private var closed = false
@@ -29,42 +29,22 @@ final class Producer(log: ShardLog,
   def isClosed: Boolean = closed
   def close(): Unit = closed = true
 
-  def publish(msgs: Message*): Seq[String] = {
+  def publish(msgs: Message*): Unit = {
     if (closed) throw new IllegalStateException("producer is closed")
     msgs.foreach { m =>
       require(m.partitionKey != null && m.partitionKey.nonEmpty,
         "partitionKey is required to publish")
     }
     val withUlids = msgs.map(m => if (m.ulid.isDefined) m else m.copy(ulid = Some(ulids.next())))
-    var pending = withUlids
-    var out = Vector.empty[String]
-    while (pending.nonEmpty) {
-      try {
-        out ++= log.putRecords(pending)
-        pending = Nil
-      } catch {
-        case _: ThrottledException =>
-          Thread.sleep(pollIntervalMs * backoffMultiplier)
+    withUlids.groupBy(route).foreach { case (shard, batch) =>
+      var sent = false
+      while (!sent) {
+        try { shard.putRecords(batch); sent = true }
+        catch { case _: ThrottledException => Thread.sleep(3 * pollIntervalMs) }
       }
     }
-    out
   }
 
-  def publishAsync(msgs: Message*)(implicit ec: ExecutionContext): Future[Seq[String]] =
+  def publishAsync(msgs: Message*)(implicit ec: ExecutionContext): Future[Unit] =
     Future(publish(msgs: _*))
-}
-
-object Producer {
-  /** Distributed batch publish: one producer per partition, so ULID
-    * monotonicity is per-partition — the exact analogue of the
-    * reference's per-producer guarantee (cross-shard order was never
-    * promised; SURVEY.md §2A note).
-    */
-  def publishDataset(logName: String, ds: Dataset[Message], seed: Long = 42L): Unit =
-    ds.foreachPartition { (it: Iterator[Message]) =>
-      val pid = Option(org.apache.spark.TaskContext.get()).map(_.partitionId()).getOrElse(0)
-      val p = new Producer(ShardLog.getOrCreate(logName),
-        seed = seed ^ (pid.toLong * 0x9e3779b97f4a7c15L))
-      it.grouped(500).foreach(batch => p.publish(batch.toSeq: _*))
-    }
 }

@@ -6,10 +6,11 @@ import graft.model.{Message, Provider}
 
 /** One durable, totally-ordered, append-only shard — the engine's
   * in-memory equivalent of a Kinesis shard, with simulator parity:
+  * records are addressed by their `Long` index, exposed on the wire as
   * zero-padded 12-digit decimal sequence numbers starting at
   * "000000000000" (`simulator/KinesisShardStream.java:30-50`), arrival
-  * timestamps, timestamp→sequence linear scan (`:76-86`), and
-  * injectable throttling for retry tests
+  * timestamps, timestamp→index linear scan (`:76-86`), and injectable
+  * throttling for retry tests
   * (`simulator/KinesisAsyncClientSimulator.java:39-254`).
   *
   * Read-side enrichment happens here, exactly like
@@ -17,15 +18,15 @@ import graft.model.{Message, Provider}
   * absent; `provider` is ALWAYS overwritten with this read's stamp.
   */
 final class ShardLog(val shardId: String = "shardId-000000000000") {
-  import ShardLog.Record
 
-  private val records = ArrayBuffer.empty[Record]
+  /** (arrivalMillis, message) per index. */
+  private val records = ArrayBuffer.empty[(Long, Message)]
   @volatile private var failPutsRemaining: Int = 0
 
   def size: Int = synchronized(records.size)
 
-  /** Next sequence number that WILL be assigned (exclusive end offset). */
-  def endSequence: String = synchronized(ShardLog.formatSeq(records.size.toLong))
+  /** Index the next appended record WILL get (exclusive end offset). */
+  def end: Long = synchronized(records.size.toLong)
 
   /** Simulate N throttled put batches (rate-limit recovery tests). */
   def injectPutFailures(n: Int): Unit = synchronized { failPutsRemaining = n }
@@ -57,31 +58,23 @@ final class ShardLog(val shardId: String = "shardId-000000000000") {
     * nextShardIteratorSupplier through the same seam. */
   val iteratorReacquisitions = new java.util.concurrent.atomic.AtomicLong()
 
-  /** The re-acquisition seam ([[ReadRetry.readWithRetry]]'s `reacquire`
-    * callback): reconstruct the read position from the cursor. */
+  /** The re-acquisition seam [[ReadRetry.readWithRetry]] calls on
+    * expiry: reconstruct the read position from the cursor. */
   def reacquireIterator(): Unit = iteratorReacquisitions.incrementAndGet()
 
-  /** Append a batch; returns assigned sequence numbers. Throws
-    * [[ThrottledException]] while injected failures remain — the
-    * producer's retry loop must re-send (only) the failed entries.
+  /** Append a batch atomically. Throws [[ThrottledException]] while
+    * injected failures remain — the producer's retry loop must re-send
+    * (only) the failed batch.
     */
   def putRecords(msgs: Seq[Message],
-                 arrivalMillis: Long = System.currentTimeMillis()): Seq[String] = synchronized {
+                 arrivalMillis: Long = System.currentTimeMillis()): Unit = synchronized {
     if (failPutsRemaining > 0) {
       failPutsRemaining -= 1
       throw new ThrottledException(s"injected throttle, ${failPutsRemaining} remaining")
     }
-    msgs.map { m =>
-      val seq = ShardLog.formatSeq(records.size.toLong)
-      records += Record(seq, arrivalMillis, m)
-      seq
-    }
+    msgs.foreach(m => records += (arrivalMillis -> m))
   }
 
-  /** Read up to `limit` records strictly ordered, starting at
-    * `fromSeq` (inclusive or exclusive). `fromSeq=None` = TRIM_HORIZON.
-    * Returns enriched messages with their sequence numbers.
-    */
   /** Records served since creation — lets tests observe scan pruning. */
   val recordsRead = new java.util.concurrent.atomic.AtomicLong()
 
@@ -89,7 +82,9 @@ final class ShardLog(val shardId: String = "shardId-000000000000") {
     * RPC against a real provider; tests assert readers batch them. */
   val readCalls = new java.util.concurrent.atomic.AtomicLong()
 
-  def read(fromSeq: Option[String], inclusive: Boolean, limit: Int): Seq[(String, Message)] = synchronized {
+  /** Up to `limit` provider-enriched records in order, starting at
+    * index `from` (0 = TRIM_HORIZON). */
+  def read(from: Long, limit: Int): Seq[Message] = synchronized {
     readCalls.incrementAndGet()
     if (expireItersRemaining > 0) {
       expireItersRemaining -= 1
@@ -100,28 +95,23 @@ final class ShardLog(val shardId: String = "shardId-000000000000") {
       if (failReadsGeneric) throw new RuntimeException(s"injected read error, $failReadsRemaining remaining")
       else throw new ThrottledException(s"injected read throttle, $failReadsRemaining remaining")
     }
-    val startIdx = fromSeq match {
-      case None => 0
-      case Some(seq) =>
-        val i = ShardLog.parseSeq(seq).toInt
-        if (inclusive) i else i + 1
-    }
-    val out = records.iterator.slice(startIdx, math.min(records.size, startIdx + math.max(limit, 0)))
-      .map(r => r.sequenceNumber -> enrich(r)).toSeq
+    val start = math.min(from, records.size.toLong).toInt
+    val stop = math.min(records.size.toLong, start + math.max(limit, 0).toLong).toInt
+    val out = (start until stop).map(i => enrich(i, records(i)._1, records(i)._2))
     recordsRead.addAndGet(out.size)
     out
   }
 
-  /** First sequence with arrival timestamp >= ts (AT_TIMESTAMP
-    * semantics, linear scan like the simulator). None = past the end. */
-  def sequenceAtTimestamp(epochMillis: Long): Option[String] = synchronized {
-    records.find(_.arrivalMillis >= epochMillis).map(_.sequenceNumber)
+  /** First index with arrival timestamp >= ts (AT_TIMESTAMP semantics,
+    * linear scan like the simulator); `end` when none has arrived yet. */
+  def indexAtTimestamp(epochMillis: Long): Long = synchronized {
+    val i = records.indexWhere(_._1 >= epochMillis)
+    if (i < 0) records.size.toLong else i.toLong
   }
 
-  private def enrich(r: Record): Message = {
-    val stamp = Provider("graft", r.arrivalMillis, shardId, r.sequenceNumber)
-    val first = r.message.firstProvider.orElse(Some(stamp))
-    r.message.copy(firstProvider = first, provider = Some(stamp))
+  private def enrich(index: Int, arrivalMillis: Long, m: Message): Message = {
+    val stamp = Provider("graft", arrivalMillis, shardId, ShardLog.formatSeq(index))
+    m.copy(firstProvider = m.firstProvider.orElse(Some(stamp)), provider = Some(stamp))
   }
 }
 
@@ -133,9 +123,10 @@ final class ThrottledException(msg: String) extends RuntimeException(msg)
 final class IteratorExpiredException(msg: String) extends RuntimeException(msg)
 
 object ShardLog {
-  final case class Record(sequenceNumber: String, arrivalMillis: Long, message: Message)
-  def formatSeq(n: Long): String = f"$n%012d"
-  def parseSeq(s: String): Long = s.toLong
+  /** The wire form of an index: the provider stamp at read and
+    * [[ShardOffset]]'s JSON are its only users. */
+  private[streaming] def formatSeq(n: Long): String = f"$n%012d"
+  private[streaming] def parseSeq(s: String): Long = s.toLong
 
   /** Global registry so DataSource V2 instances (created reflectively
     * by Spark from options) can resolve a log by name within the JVM —

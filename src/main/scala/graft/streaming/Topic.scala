@@ -16,8 +16,11 @@ import graft.model.{Cursor, Message}
   * story a 1000-executor cluster needs.
   */
 final class Topic private[streaming] (val name: String, val numShards: Int) {
+  /** Registry names of the shard logs — the only place the `topic#i`
+    * naming is spelled; the DSv2 source addresses shards by these. */
+  val logNames: IndexedSeq[String] = (0 until numShards).map(i => s"$name#$i")
   val shards: IndexedSeq[ShardLog] =
-    (0 until numShards).map(i => ShardLog.getOrCreate(s"$name#$i", f"shardId-$i%012d"))
+    logNames.indices.map(i => ShardLog.getOrCreate(logNames(i), f"shardId-$i%012d"))
 
   @volatile private var closed = false
   def isClosed: Boolean = closed
@@ -42,9 +45,13 @@ final class Topic private[streaming] (val name: String, val numShards: Int) {
     shards(idx)
   }
 
-  def producer(seed: Long = System.nanoTime()): TopicProducer = {
+  /** Key-routed [[Producer]]; publishing fails once the topic closes. */
+  def producer(seed: Long = System.nanoTime()): Producer = {
     require(!closed, "topic is closed")
-    new TopicProducer(this, seed)
+    new Producer(m => {
+      if (closed) throw new IllegalStateException("topic is closed")
+      shardFor(m.partitionKey)
+    }, pollIntervalMs = 10, seed)
   }
 
   def consumer(cursor: Cursor): ShardConsumer = {
@@ -66,25 +73,6 @@ final class Topic private[streaming] (val name: String, val numShards: Int) {
       .orderBy(col("provider.publishedTimestamp").desc,
                col("provider.shardId").desc, col("provider.sequenceNumber").desc)
       .limit(1).as[Message](encoder).collect().headOption
-  }
-}
-
-/** Producer over a topic: validates partitionKey, assigns monotonic
-  * ULIDs, routes each message to its key's shard, batches per shard.
-  */
-final class TopicProducer(topic: Topic, seed: Long) {
-  private val gen = new graft.model.UlidGenerator(seed)
-  @volatile private var closed = false
-  def isClosed: Boolean = closed
-  def close(): Unit = closed = true
-
-  def publish(msgs: Message*): Unit = {
-    if (closed || topic.isClosed) throw new IllegalStateException("producer/topic is closed")
-    msgs.foreach(m => require(m.partitionKey != null && m.partitionKey.nonEmpty,
-      "partitionKey is required to publish"))
-    val withUlids = msgs.map(m => if (m.ulid.isDefined) m else m.copy(ulid = Some(gen.next())))
-    withUlids.groupBy(m => topic.shardFor(m.partitionKey))
-      .foreach { case (shard, batch) => shard.putRecords(batch) }
   }
 }
 

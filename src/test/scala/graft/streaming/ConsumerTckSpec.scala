@@ -184,6 +184,14 @@ class ConsumerTckSpec extends AnyFunSuite {
     assert(c.receive(500).flatMap(_.externalId).contains("e"))
   }
 
+  test("receive absorbs injected read throttles and still returns the message") {
+    val log = freshLog()
+    new Producer(log, seed = 1).publish(msg("a"))
+    log.injectReadFailures(2)
+    val c = new ShardConsumer(log, Cursor.trimHorizon(log.shardId))
+    assert(c.receive(500).flatMap(_.externalId).contains("a"))
+  }
+
   test("publish requires partitionKey") {
     val p = new Producer(freshLog(), seed = 1)
     intercept[IllegalArgumentException](p.publish(msg("a").copy(partitionKey = "")))

@@ -155,6 +155,30 @@ class IngestDedupSpec extends AnyFunSuite {
     assert(verdicts(4L) == false && verdicts(9L) == true,
       s"min doc_id must own every bucket: $verdicts")
   }
+
+  test("a smaller doc_id in a LATER batch does not revise the earlier verdict") {
+    // The stated limit of the determinism contract: verdicts match the
+    // batch min(doc_id) reference only if no smaller doc_id of a bucket
+    // arrives in a later micro-batch. Doc 2 owns the bucket when it
+    // lands; doc 1 then finds only a larger owner in state — both stay
+    // first-seen, where the batch reference would flag doc 2.
+    val text = "identical payload text repeated verbatim across both docs " +
+      "so every band signature matches exactly between the pair"
+    val in = MemoryStream[(Long, String)](spark)
+    val q = IngestDedup.bandCollisions(in.toDF().toDF("doc_id", "text"))
+      .writeStream.format("memory").queryName("ingest_late_min").outputMode("append")
+      .option("checkpointLocation", Files.createTempDirectory("g").toString)
+      .start()
+    in.addData((2L, text))
+    q.processAllAvailable()
+    in.addData((1L, text))
+    q.processAllAvailable()
+    q.stop()
+    val verdicts = spark.table("ingest_late_min")
+      .groupBy("doc_id").agg(max(col("dup")).as("is_dup"))
+      .as[(Long, Boolean)].collect().toMap
+    assert(verdicts == Map(2L -> false, 1L -> false), s"verdicts: $verdicts")
+  }
 }
 
 /** Static sink so the RocksDB restart test's foreachBatch closure

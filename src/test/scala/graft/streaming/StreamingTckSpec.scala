@@ -91,10 +91,11 @@ class StreamingTckSpec extends AnyFunSuite {
       == Seq("b", "c", "d"))
   }
 
-  test("batch read of a shard log + distributed publishDataset round-trip") {
+  test("batch read of a shard log + distributed sink write round-trip") {
     val logName = "t-batch-" + System.nanoTime()
     val data = (1 to 50).map(i => Message.simple("pk" + (i % 4), "e" + i))
-    Producer.publishDataset(logName, spark.createDataset(data)(Message.encoder).repartition(4))
+    spark.createDataset(data)(Message.encoder).repartition(4)
+      .write.format("graft-messages").option("log", logName).mode("append").save()
     val back = spark.read.format("graft-messages").option("log", logName).load()
     assert(back.count() == 50)
     // every message got a ULID and a provider stamp at read
@@ -407,15 +408,15 @@ class StreamingTckSpec extends AnyFunSuite {
       new Producer(log, seed = 1).publish(msg("a"))
       log.injectIteratorExpiry(1000)
       val e = intercept[IllegalStateException] {
-        ReadRetry.readWithRetry(log, None, inclusive = true, limit = 10, pollIntervalMs = 0L)
+        ReadRetry.readWithRetry(log, 0L, limit = 10, pollIntervalMs = 0L)
       }
       assert(e.getMessage.contains("expired 100 times in a row"))
       // a successful read in between resets the budget: inject just under
       // the cap twice over — both reads recover
       log.injectIteratorExpiry(99)
-      assert(ReadRetry.readWithRetry(log, None, inclusive = true, limit = 10, pollIntervalMs = 0L).nonEmpty)
+      assert(ReadRetry.readWithRetry(log, 0L, limit = 10, pollIntervalMs = 0L).nonEmpty)
       log.injectIteratorExpiry(99)
-      assert(ReadRetry.readWithRetry(log, None, inclusive = true, limit = 10, pollIntervalMs = 0L).nonEmpty)
+      assert(ReadRetry.readWithRetry(log, 0L, limit = 10, pollIntervalMs = 0L).nonEmpty)
     } finally ShardLog.remove(logName)
   }
 
@@ -475,7 +476,7 @@ class StreamingTckSpec extends AnyFunSuite {
     awaitCount(4)
     q.stop()
     val got = ShardLog.getOrCreate(dstName)
-      .read(None, inclusive = true, limit = Int.MaxValue).map(_._2).flatMap(_.externalId)
+      .read(0L, Int.MaxValue).flatMap(_.externalId)
     assert(got.take(4) == Seq("a", "b", "c", "d"))
   }
 
@@ -508,7 +509,7 @@ class StreamingTckSpec extends AnyFunSuite {
     awaitCount(4)
     q.stop()
     val got = ShardLog.getOrCreate(dstName)
-      .read(None, inclusive = true, limit = Int.MaxValue).map(_._2).flatMap(_.externalId).toSet
+      .read(0L, Int.MaxValue).flatMap(_.externalId).toSet
     assert(got == Set("a0", "a1", "b0", "b1"))
   }
 
@@ -528,7 +529,7 @@ class StreamingTckSpec extends AnyFunSuite {
     def awaitIds(want: Set[String]): Unit = {
       val deadline = System.currentTimeMillis() + 30000
       def ids() = ShardLog.getOrCreate(dstName)
-        .read(None, inclusive = true, limit = Int.MaxValue).map(_._2).flatMap(_.externalId).toSet
+        .read(0L, Int.MaxValue).flatMap(_.externalId).toSet
       while (!want.subsetOf(ids()) && System.currentTimeMillis() < deadline) Thread.sleep(50)
       assert(want.subsetOf(ids()), s"missing ${want -- ids()}")
     }

@@ -36,6 +36,16 @@ class TopicSpec extends AnyFunSuite {
     assert(topic.toDF(spark).count() == 80)
   }
 
+  test("a throttled topic publish retries per shard and lands every message exactly once") {
+    val topic = Topics.create("tp-throttle-" + System.nanoTime(), 4)
+    topic.shards.zipWithIndex.foreach { case (s, i) => s.injectPutFailures(i) }
+    val msgs = (0 until 40).map(i => msg("k" + i, "e" + i))
+    topic.producer(seed = 5).publish(msgs: _*)
+    assert(topic.shards.map(_.size).sum == 40)
+    val got = topic.toDF(spark).select("externalId").as[String].collect().toSeq
+    assert(got.sorted == msgs.flatMap(_.externalId).sorted)
+  }
+
   test("streaming a 4-shard topic: one input partition per shard, composite offsets, restart") {
     val name = "tp-stream-" + System.nanoTime()
     val topic = Topics.create(name, 4)
