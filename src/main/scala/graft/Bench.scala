@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.model.Cursor.jsonStr
+
 /** Benchmark main — runs the headline queries on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. Work is forced through the noop DSv2 sink
   * (full plan executes, nothing buffered on the driver) — `count()`
@@ -236,9 +238,9 @@ object Bench {
     // what the session actually ran with (SPARK_GRAFT_CPUS and any
     // SPARK_GRAFT_CONF override), git_sha the code that ran
     val nproc = Runtime.getRuntime.availableProcessors
-    val master = graft.model.Cursor.jsonStr(spark.sparkContext.master)
-    val shufflePartitions = graft.model.Cursor.jsonStr(spark.conf.get("spark.sql.shuffle.partitions"))
-    val gitSha = graft.model.Cursor.jsonStr(
+    val master = jsonStr(spark.sparkContext.master)
+    val shufflePartitions = jsonStr(spark.conf.get("spark.sql.shuffle.partitions"))
+    val gitSha = jsonStr(
       scala.util.Try(scala.sys.process.Process(Seq("git", "rev-parse", "HEAD")).!!.trim).getOrElse("unknown"))
     // self-certifying record: the resolved SPARK_GRAFT_CONF override
     // map (normally {}) rides in the JSON, so a record produced under
@@ -252,7 +254,7 @@ object Bench {
   /** The override map as a JSON object; keys and values are escaped
     * alike (backslash, quote, control characters). */
   def confStamp(overrides: Seq[(String, String)]): String =
-    overrides.map { case (k, v) => graft.model.Cursor.jsonStr(k) + ":" + graft.model.Cursor.jsonStr(v) }
+    overrides.map { case (k, v) => jsonStr(k) + ":" + jsonStr(v) }
       .mkString("{", ",", "}")
 
   /** Persist the record the stdout line carries: two driver rounds in a

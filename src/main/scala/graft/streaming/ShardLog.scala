@@ -97,7 +97,7 @@ final class ShardLog(val shardId: String = "shardId-000000000000") {
     }
     val start = math.min(from, records.size.toLong).toInt
     val stop = math.min(records.size.toLong, start + math.max(limit, 0).toLong).toInt
-    val out = (start until stop).map(i => enrich(i, records(i)._1, records(i)._2))
+    val out = (start until stop).map(i => enrich(i, records(i)))
     recordsRead.addAndGet(out.size)
     out
   }
@@ -109,7 +109,8 @@ final class ShardLog(val shardId: String = "shardId-000000000000") {
     if (i < 0) records.size.toLong else i.toLong
   }
 
-  private def enrich(index: Int, arrivalMillis: Long, m: Message): Message = {
+  private def enrich(index: Int, record: (Long, Message)): Message = {
+    val (arrivalMillis, m) = record
     val stamp = Provider("graft", arrivalMillis, shardId, ShardLog.formatSeq(index))
     m.copy(firstProvider = m.firstProvider.orElse(Some(stamp)), provider = Some(stamp))
   }
